@@ -13,7 +13,6 @@ from .dedup import (
     simhash_near_pairs,
     simhash_signatures,
     spread_partitions,
-    word_shingles,
 )
 from .dedup import connected_components, incremental_dedup
 from .ingest import flatten_app_details, quarantine_invalid, valid_appids
@@ -58,7 +57,7 @@ __all__ = [
     "sentiment_windows", "review_bomb", "explode_counts", "activity_windows",
     "blocked_self_pairs", "exact_dedup_stats", "minhash_candidate_pairs",
     "minhash_signatures", "ngram_jaccard_pairs", "simhash_near_pairs",
-    "simhash_signatures", "spread_partitions", "word_shingles",
+    "simhash_signatures", "spread_partitions",
     "flatten_app_details", "quarantine_invalid", "valid_appids", "salted_join",
     "cosine", "cosine_near_dup_pairs", "cosine_topk", "lsh_bucketed_topk",
     "pandas_cosine_udf",

@@ -157,32 +157,18 @@ def exact_dedup_stats(docs: DataFrame, text_col: str = "text", group_col: str = 
     )
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a text column (JVM lambda ops).
+def word_shingles_sql(col: str, n: int = 3) -> str:
+    """Distinct word n-gram shingles of a text SQL expression, as SQL
+    text for ``F.expr`` (optimization r18, guide §4: one JVM parse
+    instead of ``n-1`` py4j lambda builds per call site).
 
     Built by ``zip_with``-ing the token array against its own shifted
     slices (n-1 linear passes), then truncating to the size-(n-1) full
     n-grams.  Never index into the token array from inside a per-element
     lambda: a captured column expression (the split) is re-evaluated *per
     element* there — measured ~30x slower on 300-char docs.  Docs with
-    < n tokens yield an empty array.
-    """
-    toks = F.split(F.trim(col), "\\s+")
-    grams = toks
-    for k in range(1, n):
-        shifted = F.slice(toks, k + 1, F.greatest(F.size(toks) - k, F.lit(0)))
-        grams = F.zip_with(grams, shifted, lambda x, y: F.concat_ws(" ", x, y))
-    full = F.slice(grams, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0)))
-    return F.when(F.size(toks) >= n, F.array_distinct(full)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def word_shingles_sql(col: str, n: int = 3) -> str:
-    """SQL-string twin of :func:`word_shingles` (optimization r18,
-    guide §4): one JVM parse instead of ``n-1`` py4j lambda builds per
-    call site.  Same operators, same empty-array/short-doc semantics
-    (parity pinned by test_word_shingles_sql_twin_parity)."""
+    < n tokens yield an empty array (pinned against Python-computed
+    shingles by test_word_shingles_sql_twin_parity)."""
     toks = f"split(trim({col}), '\\\\s+')"
     grams = toks
     for k in range(1, n):

@@ -146,20 +146,12 @@ def _flt_arr_sql(c: list[float]) -> str:
 
 
 def _sqdist_to_sql(vec: str, center: list[float]) -> str:
-    """SQL twin of :func:`_sqdist_to` (optimization r18, guide §4)."""
+    """Float squared L2 between an array SQL expression and a literal
+    center (optimization r18, guide §4: one JVM parse, no py4j lambda
+    builds)."""
     return (
         f"aggregate(zip_with({vec}, {_flt_arr_sql(center)}, "
         f"(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x)"
-    )
-
-
-def _sqdist_to(vec: Column, center: list[float]) -> Column:
-    # lit(list) — per-element .cast calls dropped (ADVICE r17)
-    c = F.lit([float(x) for x in center]).cast("array<double>")
-    return F.aggregate(
-        F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
 
 
@@ -566,23 +558,13 @@ def _int_arr_sql(c: list[int]) -> str:
     return "array(" + ",".join(f"{int(v)}L" for v in c) + ")"
 
 
-def _int_sqdist(qcol: Column, c: list[int]) -> Column:
-    """Integer squared L2 between a grid vector column and a literal."""
-    arr = F.lit([int(v) for v in c]).cast("array<long>")
-    return F.aggregate(
-        F.zip_with(qcol, arr, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _int_assign_sql(q: str, cents: list[list[int]]) -> str:
-    """SQL twin of :func:`_int_assign`'s argmin struct (optimization
-    r18, guide §4): one JVM parse instead of ``k x 2`` py4j lambda
-    builds per assignment expression.  The centroid literals render as
-    SQL ``array(...L)`` text — CreateArray of long literals, which
-    ConstantFolding collapses to the exact Literal the ``F.lit`` form
-    built.  Same struct-min tie rule (lowest cluster index)."""
+    """:func:`_int_assign`'s argmin ``struct(d, c)`` over literal
+    centroids (optimization r18, guide §4): one JVM parse instead of
+    ``k x 2`` py4j lambda builds per assignment expression.  The
+    centroid literals render as SQL ``array(...L)`` text — a
+    CreateArray of long literals that ConstantFolding collapses to one
+    Literal.  Ties go to the lowest cluster index (struct min)."""
     pairs = ",".join(
         f"named_struct('d', {_sq_sql(q, _int_arr_sql(c))}, 'c', {i})"
         for i, c in enumerate(cents)
@@ -721,36 +703,14 @@ def _pq_quantized(
 
 
 def _pq_sub_assign_sql(codebook: list[list[int]], sub: str) -> str:
-    """SQL twin of :func:`_pq_sub_assign` (optimization r18, guide §4) —
-    same struct-min argmin, one JVM parse; parity pinned in tests."""
+    """argmin code of one subspace slice ``sub`` over a literal
+    codebook — integer squared L2, ties to the lowest code (struct
+    min, the kmeans_exact rule); one JVM parse (optimization r18)."""
     pairs = ",".join(
         f"named_struct('d', {_sq_sql(sub, _int_arr_sql(c))}, 'c', {i})"
         for i, c in enumerate(codebook)
     )
     return f"array_min(array({pairs})).c"
-
-
-def _pq_sub_assign(codebook: list[list[int]], sub: Column) -> Column:
-    """argmin code over one subspace codebook — integer squared L2,
-    ties to the lowest code (struct min, the kmeans_exact rule)."""
-    pairs = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        sub,
-                        F.lit([int(v) for v in c]).cast("array<long>"),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                F.lit(i).alias("c"),
-            )
-            for i, c in enumerate(codebook)
-        ]
-    )
-    return F.array_min(pairs)["c"]
 
 
 def pq_train(
@@ -1040,24 +1000,12 @@ def hard_negative_topk(
 # ---------------------------------------------------------------------------
 
 
-def _centroid_matrix(cents: list[list[int]]) -> Column:
-    """Literal k x dim integer centroid matrix (array<array<long>>)."""
-    # lit(nested list) — in classic py4j mode still one call per
-    # element, but the per-element .cast calls are gone (~2x fewer
-    # round-trips) and ConstantFolding folds it to one Literal
-    # (ADVICE r17 corrected the single-Literal claim; only Spark
-    # Connect builds it as one node)
-    return F.lit([[int(v) for v in c] for c in cents]).cast(
-        "array<array<long>>"
-    )
-
-
 def _pinned_view(spark, tag: str, value, sql_type: str) -> str:
     """Register a pinned quantizer artifact (centroid matrix / PQ
     codebooks) as a ONE-ROW temp view and return its name (r13, r12
     verdict #2 — the IVFADC literal-compile fix).
 
-    The literal form (:func:`_centroid_matrix` et al.) builds a
+    An artifact written inline as a literal builds a
     ``CreateArray`` tree of ~1-2k ``Literal`` nodes that Catalyst
     re-analyzes at EVERY reference — and the salted two-stage rank
     references the scoring frame twice, so ``ivfadc_search``'s
@@ -1076,7 +1024,8 @@ def _pinned_view(spark, tag: str, value, sql_type: str) -> str:
     subquery with ``withColumn(name, _pinned_scalar(view))`` FIRST and
     reference the plain column inside ``transform``/``aggregate`` —
     CollapseProject then folds it back into the HOF after analysis,
-    which executes fine (pinned by tests).
+    which executes fine (pinned by
+    ``test_pinned_artifact_forms_match_literal``).
 
     View names are CONTENT-ADDRESSED (md5 of the value), so
     re-registration is an idempotent replace, distinct artifacts never
@@ -1140,38 +1089,32 @@ def _cb_view(spark, codebooks: list[list[list[int]]]) -> str:
     )
 
 
-def _sqdist_cols(a: Column, b: Column) -> Column:
-    """Integer squared L2 between two array columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 # ---------------------------------------------------------------------------
-# SQL-string twins of the HOF builders (optimization r18, guide §4/§7.3).
+# Higher-order-function kernels as SQL strings (optimization r18, guide
+# §4/§7.3) — the ONE implementation of each integer-distance, argmin,
+# probe, PQ-code, reconstruction and LUT/ADC kernel.
 #
 # Each Python lambda handed to F.transform/F.zip_with/F.aggregate is
 # converted driver-side via ``_create_lambda`` — several py4j round-trips
 # per lambda — and the ivfadc-family query builders stack dozens of them,
 # which measured as the dominant residual construct cost after r17
-# (~0.5 s per ivfadc query).  The same higher-order expressions written
-# as ONE SQL string parse JVM-side in a single round-trip and analyze to
-# the IDENTICAL Catalyst operators (same functions, same casts, same tie
-# rules), so results are bit-identical and plans differ only in lambda
-# variable names.  The Column forms above/below are kept as parity twins
-# (pinned by tests/test_extensions_unit.py::test_sql_twin_builders_parity).
+# (~0.5 s per ivfadc query).  Written as ONE SQL string, the same
+# expression parses JVM-side in a single round-trip.  Every builder
+# returns SQL text for ``F.expr`` or for nesting in another builder;
+# the rules (first-minimum argmin, (d, j) probe order, Σ lut[s][codes[s]])
+# are pinned against plain-Python values by
+# tests/test_extensions_unit.py::test_sql_twin_builders_parity.
 #
-# Composition hygiene: every twin's internal lambda variables are chosen
-# so nesting one twin inside another never shadows a variable the inner
-# expression references (inner sqdist uses x/y/acc; enclosing transforms
-# use c/i/j/s/w/ci/cbs/code).
+# Composition hygiene: every builder's internal lambda variables are
+# chosen so nesting one inside another never shadows a variable the
+# inner expression references (inner sqdist uses x/y/acc; enclosing
+# transforms use c/i/j/s/w/ci/cbs/code).
 # ---------------------------------------------------------------------------
 
 
 def _sq_sql(a: str, b: str) -> str:
-    """SQL twin of :func:`_sqdist_cols` over two array SQL expressions."""
+    """Integer squared L2 between two array SQL expressions (bigint
+    accumulator)."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
         f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
@@ -1179,7 +1122,10 @@ def _sq_sql(a: str, b: str) -> str:
 
 
 def _argmin_cell_sql(q: str, cm: str) -> str:
-    """SQL twin of :func:`_argmin_cell` (struct min, ties to lowest cell)."""
+    """Integer argmin ``struct(d, c)`` of ``q`` over the centroid
+    MATRIX expression ``cm`` — ties to the lowest index via struct min,
+    the exact :func:`_int_assign` rule (transform's 0-based index
+    replays ``enumerate``)."""
     return (
         f"array_min(transform({cm}, (c, i) -> "
         f"named_struct('d', {_sq_sql(q, 'c')}, 'c', i)))"
@@ -1187,7 +1133,9 @@ def _argmin_cell_sql(q: str, cm: str) -> str:
 
 
 def _probes_sql(q: str, cm: str, nprobe: int) -> str:
-    """SQL twin of :func:`_probes_of` (deterministic (d, j) argsort)."""
+    """The ``nprobe`` nearest cell ids of ``q`` over the centroid matrix
+    ``cm`` — deterministic ``(distance, cell)`` argsort, ties to the
+    lower cell id."""
     return (
         f"slice(transform(array_sort(transform({cm}, (c, j) -> "
         f"named_struct('d', {_sq_sql(q, 'c')}, 'j', j))), s -> s.j), "
@@ -1204,7 +1152,8 @@ def _residual_sql(q: str, cm: str, cell: str) -> str:
 
 
 def _recon_sql(cb: str, codes: str) -> str:
-    """SQL twin of :func:`_recon_col`."""
+    """Residual reconstruction from an m-code array under the codebook
+    expression ``cb``: the concatenation of ``cb[s][codes[s]]``."""
     return (
         f"flatten(transform({codes}, (code, s) -> "
         f"element_at(element_at({cb}, s + 1), CAST(code + 1 AS INT))))"
@@ -1212,7 +1161,9 @@ def _recon_sql(cb: str, codes: str) -> str:
 
 
 def _codes_sql(cb: str, q: str, subdim: int) -> str:
-    """SQL twin of :func:`_codes_col` (per-subspace argmin codes)."""
+    """Per-subspace argmin codes of ``q`` over the codebook expression
+    ``cb`` — ties to the lowest code via struct min (the
+    :func:`_pq_sub_assign_sql` rule)."""
     sub = f"slice({q}, s * {int(subdim)} + 1, {int(subdim)})"
     return (
         f"transform({cb}, (cbs, s) -> array_min(transform(cbs, (w, ci) -> "
@@ -1221,7 +1172,23 @@ def _codes_sql(cb: str, q: str, subdim: int) -> str:
 
 
 def _lut_sql(cb: str, qres: str, subdim: int) -> str:
-    """SQL twin of :func:`_ivfadc_lut_col` (per-(query, cell) ADC LUT)."""
+    """Per-(query, cell) ADC lookup table over the codebook expression
+    ``cb`` (optimization r17, guide §1.2 "per-task work" — Jégou §V's
+    actual ADC formulation): ``lut[s][c]`` = integer squared L2 between
+    the query-residual's subspace-``s`` slice and codeword ``c``.
+
+    Because ``||qres − recon(codes)||² = Σ_s ||qres_sub[s] −
+    cb[s][codes[s]]||²`` regroups exactly (int64 addition is
+    associative), scoring a candidate becomes ``m`` table lookups
+    (:func:`_lut_adc_sql`) instead of a 64-element zip_with/aggregate
+    per pair — and the candidate side no longer needs the decoded
+    reconstruction at all, eliminating the per-corpus-row
+    :func:`_recon_sql` pass.  Spark evaluates higher-order-function
+    lambdas INTERPRETED (no codegen), so moving the O(dim) arithmetic
+    from per-candidate rows onto the bounded (query × probed-cell)
+    frame is the dominant term in the measured ivfadc headline cost.
+    Same integers, same tie rules — bit-identical results (the
+    registered oracles replay both formulations)."""
     sub = f"slice({qres}, s * {int(subdim)} + 1, {int(subdim)})"
     return (
         f"transform({cb}, (cbs, s) -> transform(cbs, w -> "
@@ -1230,135 +1197,14 @@ def _lut_sql(cb: str, qres: str, subdim: int) -> str:
 
 
 def _lut_adc_sql(lut: str, codes: str) -> str:
-    """SQL twin of :func:`_lut_adc_col` (``Σ_s lut[s][codes[s]]``)."""
+    """ADC distance from a per-(query, cell) LUT (:func:`_lut_sql`) and
+    an m-code array: ``Σ_s lut[s][codes[s]]`` — m element_at lookups +
+    m adds per candidate, shape-agnostic in k_sub (per-cell retrained
+    codebooks keep their own inner length)."""
     return (
         f"aggregate(transform({codes}, (code, s) -> "
         f"element_at(element_at({lut}, CAST(s + 1 AS INT)), "
         f"CAST(code + 1 AS INT))), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-
-
-def _argmin_cell(qcol: Column, cmat: Column) -> Column:
-    """Integer argmin ``struct(d, c)`` of ``qcol`` over the centroid
-    MATRIX COLUMN — ties to the lowest index via struct min, the exact
-    :func:`_int_assign` rule (transform's 0-based index replays
-    ``enumerate``)."""
-    return F.array_min(
-        F.transform(
-            cmat,
-            lambda c, i: F.struct(
-                _sqdist_cols(qcol, c).alias("d"), i.alias("c")
-            ),
-        )
-    )
-
-
-def _probes_of(qcol: Column, cmat: Column, nprobe: int) -> Column:
-    """The ``nprobe`` nearest cell ids for a query vector over the
-    centroid matrix column — deterministic ``(distance, cell)``
-    argsort, ties to the lower cell id (the :func:`ivfadc_search`
-    literal rule, column form)."""
-    return F.slice(
-        F.transform(
-            F.array_sort(
-                F.transform(
-                    cmat,
-                    lambda c, j: F.struct(
-                        _sqdist_cols(qcol, c).alias("d"), j.alias("j")
-                    ),
-                )
-            ),
-            lambda s: s["j"],
-        ),
-        1,
-        nprobe,
-    )
-
-
-def _recon_col(cb: Column, codes: Column) -> Column:
-    """Residual reconstruction from an m-code column under the codebook
-    COLUMN (the :func:`_ivfadc_recon` semantics, column form)."""
-    return F.flatten(
-        F.transform(
-            codes,
-            lambda code, s: F.element_at(
-                F.element_at(cb, s + F.lit(1)),
-                (code + F.lit(1)).cast("int"),
-            ),
-        )
-    )
-
-
-def _codes_col(cb: Column, qcol: Column, subdim: int) -> Column:
-    """Per-subspace argmin codes over the codebook COLUMN — ties to
-    the lowest code via struct min (the :func:`_pq_sub_assign` rule,
-    column form)."""
-    return F.transform(
-        cb,
-        lambda cbs, s: F.array_min(
-            F.transform(
-                cbs,
-                lambda w, ci: F.struct(
-                    _sqdist_cols(
-                        F.slice(
-                            qcol,
-                            s * F.lit(subdim) + F.lit(1),
-                            F.lit(subdim),
-                        ),
-                        w,
-                    ).alias("d"),
-                    ci.alias("c"),
-                ),
-            )
-        )["c"],
-    )
-
-
-def _ivfadc_lut_col(cb: Column, qres: Column, subdim: int) -> Column:
-    """Per-(query, cell) ADC lookup table over the codebook COLUMN
-    (optimization r17, guide §1.2 "per-task work" — Jégou §V's actual
-    ADC formulation): ``lut[s][c]`` = integer squared L2 between the
-    query-residual's subspace-``s`` slice and codeword ``c``.
-
-    Because ``||qres − recon(codes)||² = Σ_s ||qres_sub[s] −
-    cb[s][codes[s]]||²`` regroups exactly (int64 addition is
-    associative), scoring a candidate becomes ``m`` table lookups
-    (:func:`_lut_adc_col`) instead of a 64-element zip_with/aggregate
-    per pair — and the candidate side no longer needs the decoded
-    reconstruction at all, eliminating the per-corpus-row
-    :func:`_recon_col` pass.  Spark evaluates higher-order-function
-    lambdas INTERPRETED (no codegen), so moving the O(dim) arithmetic
-    from per-candidate rows onto the bounded (query × probed-cell)
-    frame is the dominant term in the measured ivfadc headline cost.
-    Same integers, same tie rules — bit-identical results (the
-    registered oracles replay both formulations)."""
-    return F.transform(
-        cb,
-        lambda cbs, s: F.transform(
-            cbs,
-            lambda w: _sqdist_cols(
-                F.slice(qres, s * F.lit(subdim) + F.lit(1), F.lit(subdim)),
-                w,
-            ),
-        ),
-    )
-
-
-def _lut_adc_col(lut: Column, codes: Column) -> Column:
-    """ADC distance from a per-(query, cell) LUT (:func:`_ivfadc_lut_col`)
-    and an m-code column: ``Σ_s lut[s][codes[s]]`` — m element_at
-    lookups + m adds per candidate, shape-agnostic in k_sub (per-cell
-    retrained codebooks keep their own inner length)."""
-    return F.aggregate(
-        F.transform(
-            codes,
-            lambda code, s: F.element_at(
-                F.element_at(lut, (s + F.lit(1)).cast("int")),
-                (code + F.lit(1)).cast("int"),
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
     )
 
 
@@ -1389,34 +1235,22 @@ def _nn_join_cluster(df: DataFrame) -> DataFrame:
     )
 
 
-def _ivf_residuals(grid: DataFrame, cents: list[list[int]]) -> DataFrame:
+def _ivf_residuals_hoisted(grid: DataFrame, cents: list[list[int]]) -> DataFrame:
     """Assign each grid vector to its nearest coarse cell and subtract
     that centroid: ``(vec_id, cluster, q)`` with ``q`` the integer
     RESIDUAL (Jégou §V — IVFADC quantizes residuals, which are far more
     clusterable than raw vectors because the coarse quantizer has
-    already removed the cell mean).  Zero-shuffle scan-fused: argmin +
-    element_at + zip_with over literals."""
-    assigned = _int_assign(grid, cents)
-    cmat = (
-        "CAST(array("
-        + ",".join(_int_arr_sql(c) for c in cents)
-        + ") AS ARRAY<ARRAY<BIGINT>>)"
-    )
-    return assigned.select(
-        "vec_id",
-        "cluster",
-        F.expr(_residual_sql("q", cmat, "cluster")).alias("q"),
-    )
+    already removed the cell mean).  Ties go to the lowest cell (the
+    :func:`_int_assign` rule).  Zero-shuffle scan-fused: argmin +
+    element_at + zip_with.
 
-
-def _ivf_residuals_hoisted(grid: DataFrame, cents: list[list[int]]) -> DataFrame:
-    """:func:`_ivf_residuals` with the centroid matrix hoisted into a
-    pinned scalar-subquery column (r13) — bit-identical output, ~K x dim
-    fewer literal nodes per plan reference.  Used on the STREAM side of
-    the streaming ANN probes, where the literal tree was re-analyzed
-    per micro-batch plan; uncorrelated scalar subqueries execute fine
-    inside the micro-batch plans (pinned by the registered streaming
-    queries' oracles)."""
+    The centroid matrix rides as a pinned scalar-subquery column (r13),
+    not as a literal tree: ~K x dim fewer literal nodes per plan
+    reference.  Used by :func:`ivfadc_train`, the drift retrain and the
+    STREAM side of the streaming ANN probes, where a literal tree was
+    re-analyzed per micro-batch plan; uncorrelated scalar subqueries
+    execute fine inside the micro-batch plans (pinned by the registered
+    streaming queries' oracles)."""
     cm = _pinned_scalar(_cmat_view(grid.sparkSession, cents))
     g = grid.withColumn("_cm", cm)
     g = g.withColumn("cluster", F.expr(_argmin_cell_sql("q", "_cm") + ".c"))
@@ -1447,29 +1281,10 @@ def ivfadc_train(
     ``q``.  Both artifacts pin as literals with provenance tests."""
     grid = _pq_quantized(embeddings, scale, id_col, vec_col)
     return _pq_train_grid(
-        _ivf_residuals(grid, coarse_cents).select("vec_id", "q"),
+        _ivf_residuals_hoisted(grid, coarse_cents).select("vec_id", "q"),
         m=m,
         k_sub=k_sub,
         iters=iters,
-    )
-
-
-def _ivfadc_recon(codebooks: list[list[list[int]]], codes: Column) -> Column:
-    """Decode an m-code column back to the residual reconstruction
-    under literal codebooks (array<long> of the full dim)."""
-    m = len(codebooks)
-    return F.flatten(
-        F.array(
-            *[
-                F.element_at(
-                    F.lit(
-                        [[int(v) for v in c] for c in codebooks[s]]
-                    ).cast("array<array<long>>"),
-                    (codes.getItem(s) + 1).cast("int"),
-                )
-                for s in range(m)
-            ]
-        )
     )
 
 
@@ -1505,18 +1320,25 @@ def _np_ivfadc_encode_udf(
 
     Bit-exact by construction: quantization replicates Spark's
     ``round(double)`` HALF_UP (away from zero — NOT numpy's banker's
-    rint); int64 squared-L2 sums are exact; ``np.argmin`` returns the
-    FIRST minimum, which is precisely the struct-min ties-to-lowest
-    rule of the HOF form.  Parity pinned by
-    test_np_encode_matches_hof_encode and by every registered ivfadc
-    oracle (hash-exact).  Measured on the encode pass: ~tie at sf0.1
+    rint), computed as ``trunc(x)`` plus one step away from zero when
+    ``|x − trunc(x)| >= 0.5``.  Both terms are exact in binary, and
+    Spark rounds the double's shortest decimal string, which reads
+    ``k.5`` only when the double equals ``k + 0.5`` — so the two agree
+    on every double.  (``floor(x + 0.5)`` does not: the addition
+    itself rounds, taking 0.49999999999999994 to 1 and odd integers
+    above 2^52 up by one.)  int64 squared-L2 sums are exact;
+    ``np.argmin`` returns the FIRST minimum, which is precisely the
+    struct-min ties-to-lowest rule of the SQL builders
+    (:func:`_argmin_cell_sql`, :func:`_codes_sql`) that the streaming
+    branch runs.  Parity pinned by test_np_encode_matches_hof_encode
+    and by every registered ivfadc oracle (hash-exact).  Measured on the encode pass: ~tie at sf0.1
     (2k vectors — Python-worker fork dominates), 1.56 s -> 0.59 s at
     10x (interleaved noop A/B, one session) — the per-row interpreted
     arithmetic was the scale bottleneck, exactly as the r17 verdict
     called it.
 
     A NULL embedding row yields (cluster = 0, NULL qr, codes =
-    [0]*m) — the HOF form's exact semantics: every distance is NULL,
+    [0]*m) — the SQL builders' exact semantics: every distance is NULL,
     struct comparison falls through to the index, and the lowest
     cell/code (0) wins.  The artifacts ride the closure (kilobytes,
     broadcast once per executor); heavy work is one matmul-shaped
@@ -1540,7 +1362,7 @@ def _np_ivfadc_encode_udf(
     @pandas_udf("struct<cluster:int, qr:array<bigint>, codes:array<int>>")
     def _enc(v: pd.Series) -> pd.DataFrame:
         n = len(v)
-        # null-embedding rows: every distance is NULL, so the HOF
+        # null-embedding rows: every distance is NULL, so the SQL
         # struct-min falls through to the index — cell 0 and code 0
         # win, while the residual itself stays NULL; replicate exactly
         cluster = np.full(n, 0, dtype=object)
@@ -1551,9 +1373,10 @@ def _np_ivfadc_encode_udf(
         if len(ok):
             x = np.stack(v.iloc[ok].to_numpy()).astype(np.float64) * fscale
             # Spark round(double) is HALF_UP (away from zero), not rint
-            q = np.where(
-                x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)
-            ).astype(np.int64)
+            t = np.trunc(x)
+            q = (t + np.where(np.abs(x - t) >= 0.5, np.sign(x), 0.0)).astype(
+                np.int64
+            )
             d = ((q[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
             cl = d.argmin(axis=1)  # first min == ties-to-lowest cell
             qr = q - cents[cl]
@@ -1619,8 +1442,8 @@ def _ivfadc_working(
             )
             .withColumn("_cb", cbv)
         )
-    # streaming frames keep the pure-JVM SQL-twin form (r18) — same
-    # Catalyst operators as the r17 lambdas, one JVM parse per column
+    # streaming frames run the pure-JVM SQL-builder encode (r18), one
+    # JVM parse per column
     cm = _pinned_scalar(_cmat_view(spark, coarse_cents))
     grid = (
         _pq_quantized(embeddings, scale, id_col, vec_col)
@@ -1732,7 +1555,7 @@ def ivfadc_search(
     # pass is encode ONLY (optimization r17): the decoded
     # reconstruction is never materialized, because ADC scoring runs
     # against the per-(query, cell) LUT below (same integers — see
-    # :func:`_ivfadc_lut_col`).
+    # :func:`_lut_sql`).
     enc = ivfadc_encode(
         embeddings, coarse_cents, codebooks, scale, id_col, vec_col
     )
@@ -1929,9 +1752,9 @@ def ivfadc_search_pruned(
     if ts is not None:
         idx = idx.join(F.broadcast(ts), "vec_id", "left_anti")
     # The query batch is already a driver-side literal, so the ADC LUT
-    # (optimization r17 — see :func:`_ivfadc_lut_col`) is computed in
+    # (optimization r17 — see :func:`_lut_sql`) is computed in
     # driver integer arithmetic per (query, probed cell): the store is
-    # never decoded (no per-row _recon_col pass), candidates score via
+    # never decoded (no per-row _recon_sql pass), candidates score via
     # m lookups, and the codebook artifact never enters the plan at
     # all.  Per-cell codebook OVERRIDES route here exactly as decode
     # did: the LUT for an overridden cell is built from ITS codebook.
@@ -2029,9 +1852,9 @@ def ivfadc_topk_frame(
     # corpus pass is encode ONLY (optimization r17): candidates score
     # via the per-(query, cell) ADC LUT computed on the exploded probe
     # frame — same integers as decoding the snapshot per row (see
-    # :func:`_ivfadc_lut_col`), but the O(dim) arithmetic runs on
+    # :func:`_lut_sql`), but the O(dim) arithmetic runs on
     # |flagged| x nprobe rows instead of every candidate pair, and the
-    # per-corpus-row _recon_col pass disappears.
+    # per-corpus-row _recon_sql pass disappears.
     enc = ivfadc_encode(
         embeddings, coarse_cents, codebooks, scale, id_col, vec_col
     )
@@ -2250,7 +2073,7 @@ def mmr_diversify(cands: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def sign_signature(qcol: Column, dim: int = 64) -> list[Column]:
+def _sign_signature_sql(q: str, dim: int = 64) -> list[str]:
     """Pack a grid vector's SIGN BITS into two 32-bit halves
     ``(sig_lo, sig_hi)`` (r12) — the 8-bytes-per-vector binary
     signature billion-scale ANN systems keep memory-resident as the
@@ -2263,34 +2086,11 @@ def sign_signature(qcol: Column, dim: int = 64) -> list[Column]:
     one 64-bit word: every packed value stays a small POSITIVE long,
     so neither engine's shift/overflow semantics are in play (the
     XOR+popcount distance is two's-complement-safe either way, but
-    the BUILD path avoids the 1<<63 hazard entirely)."""
-    if dim != 64:
-        raise ValueError("sign_signature: packs exactly 64 dims")
-    halves = []
-    for h in range(2):
-        powers = F.array(
-            *[F.lit(1 << j).cast("long") for j in range(32)]
-        )
-        halves.append(
-            F.aggregate(
-                F.zip_with(
-                    F.slice(qcol, h * 32 + 1, 32),
-                    powers,
-                    lambda x, p: F.when(x > 0, p).otherwise(
-                        F.lit(0).cast("long")
-                    ),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-        )
-    return halves
+    the BUILD path avoids the 1<<63 hazard entirely).
 
-
-def _sign_signature_sql(q: str, dim: int = 64) -> list[str]:
-    """SQL twin of :func:`sign_signature` (optimization r18, guide §4):
-    same CASE-per-bit fold, one JVM parse per half instead of ~68 py4j
-    literal/lambda builds.  Parity pinned next to the other twins."""
+    Returns one SQL expression per half: a CASE-per-bit fold, one JVM
+    parse per half instead of ~68 py4j literal/lambda builds
+    (optimization r18, guide §4)."""
     if dim != 64:
         raise ValueError("sign_signature: packs exactly 64 dims")
     out = []
@@ -3016,9 +2816,9 @@ def _pq_train_grid_cells(
       CASE ladder (r16, ADVICE r15: the r15 slot-per-cell-id layout
       padded the artifact to ``max(cells)+1`` slots with filler
       books, so its size scaled with the max drifted id rather than
-      ``|drifted|``) — and the argmin is the column form of
-      :func:`_pq_sub_assign` — ``array_min`` over ``struct(d, c)``,
-      ties to the lowest code;
+      ``|drifted|``) — and the argmin is the
+      :func:`_pq_sub_assign_sql` rule over the cell's book —
+      ``array_min`` over ``struct(d, c)``, ties to the lowest code;
     - UPDATE: the same driver-side ``floor(sum/n)`` fold, now over a
       collect bounded by ``|cells| * m * k_sub * subdim``; an emptied
       code keeps its centroid.
@@ -3080,26 +2880,20 @@ def _pq_train_grid_cells(
                 spark, "cb4i", slots, "array<array<array<array<bigint>>>>"
             )
         )
-        cb_cell = F.element_at(F.col("_cb4"), slot_of)
 
-        def _assign(s: int, sub: Column) -> Column:
-            return F.array_min(
-                F.transform(
-                    F.element_at(cb_cell, s + 1),
-                    lambda code, i: F.struct(
-                        _sqdist_cols(sub, code).alias("d"),
-                        i.alias("c"),
-                    ),
-                )
-            )["c"]
+        def _assign(s: int) -> Column:
+            sub = f"slice(q, {s * subdim + 1}, {subdim})"
+            return F.expr(
+                f"array_min(transform(element_at(_cbc, {s + 1}), "
+                f"(code, i) -> named_struct('d', {_sq_sql(sub, 'code')}, "
+                f"'c', i))).c"
+            )
 
         per_sub = F.array(
             *[
                 F.struct(
                     F.lit(s).alias("s"),
-                    _assign(
-                        s, F.slice(F.col("q"), s * subdim + 1, subdim)
-                    ).alias("c"),
+                    _assign(s).alias("c"),
                     F.slice(F.col("q"), s * subdim + 1, subdim).alias("sq"),
                 )
                 for s in range(m)
@@ -3107,6 +2901,7 @@ def _pq_train_grid_cells(
         )
         rows = (
             work.withColumn("_cb4", cbv)
+            .withColumn("_cbc", F.element_at(F.col("_cb4"), slot_of))
             .select("cluster", F.explode(per_sub).alias("e"))
             .select(
                 "cluster", "e.s", "e.c", F.posexplode("e.sq").alias("pos", "x")

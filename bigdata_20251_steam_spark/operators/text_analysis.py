@@ -536,7 +536,7 @@ def cross_split_contamination(
 
     Returns (id, n_grams, n_contaminated, contamination_ratio).
     """
-    from .dedup import word_shingles
+    from .dedup import word_shingles_sql
     from .sampling import hash_split
 
     split = hash_split(docs, id_col).select(F.col(id_col), "split")
@@ -545,7 +545,9 @@ def cross_split_contamination(
         .select(
             F.col(id_col),
             "split",
-            F.explode(word_shingles(F.col(text_col), shingle_n)).alias("g"),
+            F.explode(
+                F.expr(word_shingles_sql(f"`{text_col}`", shingle_n))
+            ).alias("g"),
         )
         .select(F.col(id_col), "split", md5_long(F.col("g")).alias("h"))
     )

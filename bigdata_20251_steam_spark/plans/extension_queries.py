@@ -6757,7 +6757,7 @@ def _hamming_oracle(k: int = 5, shortlist: int = _HAMMING_SHORTLIST) -> str:
     headline=True,  # the cheapest ANN tier belongs in the bench: its
     # flat ~1.5 s row is the stage-0 cost floor the ladder amortizes to
     doc="Binary-signature ANN: Hamming stage-0 prefilter + exact "
-    "re-rank (operators/similarity.py:sign_signature + "
+    "re-rank (operators/similarity.py:_sign_signature_sql + "
     "hamming_topk_rerank, r12; Charikar hyperplane-LSH sign "
     "quantization, Goemans-Williamson angle bound) — the cheapest "
     "tier in the ANN ladder and the memory-resident prefilter "

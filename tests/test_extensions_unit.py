@@ -3366,7 +3366,7 @@ def test_pq_probe_gate_semantics(spark):
     tau = 11_000  # probe1->recon0 is 100^2+1^2 = 10,001
     snapshot = sim.ivfadc_decode_snapshot(emb, cents, books)
     grid = sim._pq_quantized(emb, 1000, "vec_id", "embedding")
-    probe = sim._ivf_residuals(grid, cents).select(
+    probe = sim._ivf_residuals_hoisted(grid, cents).select(
         "vec_id", F.col("cluster").alias("cell"), F.col("q").alias("qr")
     )
     adc = F.aggregate(
@@ -3897,11 +3897,11 @@ def test_r12_operators_degenerate_inputs(spark):
     import pytest as _pytest
 
     from bigdata_20251_steam_spark.operators.similarity import (
+        _sign_signature_sql,
         hamming_topk_rerank,
         ivfadc_distortion_report,
         ivfadc_topk_frame,
         mmr_diversify,
-        sign_signature,
     )
     from bigdata_20251_steam_spark.plans.extension_queries import (
         _IVFADC_CENTS,
@@ -3934,7 +3934,7 @@ def test_r12_operators_degenerate_inputs(spark):
 
     # parameter guards
     with _pytest.raises(ValueError, match="packs exactly 64"):
-        sign_signature(None, dim=32)
+        _sign_signature_sql("q", dim=32)
     with _pytest.raises(ValueError, match="k must be <= shortlist"):
         hamming_topk_rerank(emb, query_ids=[1], k=9, shortlist=3)
     with _pytest.raises(ValueError, match="nprobe must be in"):
@@ -3951,127 +3951,6 @@ def test_r12_operators_degenerate_inputs(spark):
     r = rep[0]
     assert r["n_vectors"] == 1
     assert r["mean_err"] == r["max_err"] == r["total_err"] >= 0
-
-
-def test_pinned_artifact_forms_match_literal(spark):
-    """r13 (r12 verdict #2): the scalar-subquery artifact forms —
-    coarse argmin, probe argsort, per-subspace codes, reconstruction —
-    replay the LITERAL forms bit-for-bit, including both tie rules
-    (equidistant centroids -> lowest cell; equidistant codewords ->
-    lowest code).  This is the cross-check that keeps the literal
-    helpers (_int_assign/_pq_sub_assign/_ivfadc_recon) as the executable
-    reference for the hoisted plan shapes, and it pins the
-    CollapseProject behavior the hoist relies on: a scalar subquery
-    materialized via withColumn may be folded INTO a higher-order
-    function after analysis and still execute."""
-    from pyspark.sql import functions as F
-
-    from bigdata_20251_steam_spark.operators import similarity as sim
-
-    cents = [[0, 0, 0, 0], [10, 0, 0, 0], [0, 10, 0, 0]]
-    books = [
-        [[0, 0], [5, 5], [9, 9]],
-        [[0, 0], [-5, -5]],
-    ]
-    subdim = 2
-    rows = [
-        (1, [1, 0, 0, 0]),
-        (2, [5, 0, 0, 0]),   # equidistant cells 0/1 -> tie to cell 0
-        (3, [0, 12, 3, -4]),
-        (4, [2, 2, 2, 2]),   # residual subspace ties exercise code min
-        (5, [-7, 3, 9, 9]),
-    ]
-    grid = spark.createDataFrame(rows, "vec_id long, q array<bigint>")
-
-    # literal forms
-    lit_assigned = sim._int_assign(grid, cents)
-    m = len(books)
-    lit_codes = F.array(
-        *[
-            sim._pq_sub_assign(
-                books[s], F.slice(F.col("qr"), s * subdim + 1, subdim)
-            )
-            for s in range(m)
-        ]
-    )
-    cent = F.element_at(
-        sim._centroid_matrix(cents), (F.col("cluster") + 1).cast("int")
-    )
-    lit = lit_assigned.select(
-        "vec_id",
-        "cluster",
-        F.zip_with(F.col("q"), cent, lambda x, y: x - y).alias("qr"),
-    ).select(
-        "vec_id",
-        "cluster",
-        "qr",
-        lit_codes.alias("codes"),
-    ).select(
-        "vec_id",
-        "cluster",
-        "qr",
-        "codes",
-        sim._ivfadc_recon(books, F.col("codes")).alias("r"),
-    )
-
-    # pinned scalar-subquery forms
-    cm = sim._pinned_scalar(sim._cmat_view(spark, cents))
-    cb = sim._pinned_scalar(sim._cb_view(spark, books))
-    g = grid.withColumn("_cm", cm).withColumn("_cb", cb)
-    best = sim._argmin_cell(F.col("q"), F.col("_cm"))
-    col = g.withColumn("cluster", best["c"]).withColumn(
-        "qr",
-        F.zip_with(
-            F.col("q"),
-            F.element_at(F.col("_cm"), (F.col("cluster") + 1).cast("int")),
-            lambda x, y: x - y,
-        ),
-    ).select(
-        "vec_id",
-        "cluster",
-        "qr",
-        sim._codes_col(F.col("_cb"), F.col("qr"), subdim).alias("codes"),
-        "_cb",
-    ).select(
-        "vec_id",
-        "cluster",
-        "qr",
-        "codes",
-        sim._recon_col(F.col("_cb"), F.col("codes")).alias("r"),
-    )
-
-    lit_rows = {r["vec_id"]: r.asDict() for r in lit.collect()}
-    col_rows = {r["vec_id"]: {k: v for k, v in r.asDict().items() if k != "_cb"}
-                for r in col.collect()}
-    assert lit_rows == col_rows
-    # the tie cases actually hit the rules they claim to
-    assert lit_rows[2]["cluster"] == 0
-
-    # probe argsort parity (ties to the lower cell id)
-    lit_probes = F.slice(
-        F.transform(
-            F.array_sort(
-                F.array(
-                    *[
-                        F.struct(
-                            sim._int_sqdist(F.col("q"), c).alias("d"),
-                            F.lit(j).alias("j"),
-                        )
-                        for j, c in enumerate(cents)
-                    ]
-                )
-            ),
-            lambda s: s["j"],
-        ),
-        1,
-        2,
-    )
-    got_lit = {r["vec_id"]: r["p"] for r in grid.select(
-        "vec_id", lit_probes.alias("p")).collect()}
-    got_col = {r["vec_id"]: r["p"] for r in g.select(
-        "vec_id", sim._probes_of(F.col("q"), F.col("_cm"), 2).alias("p")
-    ).collect()}
-    assert got_lit == got_col
 
 
 def test_ivfadc_nprobe_sweep_contracts(spark):
@@ -4757,152 +4636,245 @@ def test_guard_not_retracted_blocks_readd(spark):
     }
 
 
-def test_sql_twin_builders_parity(spark):
-    """Optimization r18 (guide §4): the SQL-string twins of the HOF
-    builders (_sq_sql/_argmin_cell_sql/_probes_sql/_residual_sql/
-    _recon_sql/_codes_sql/_lut_sql/_lut_adc_sql/_int_assign_sql/
-    _pq_sub_assign_sql/_sign_signature_sql/_sqdist_to_sql) must replay
-    the Column forms bit-for-bit — same integers, same struct-min tie
-    rules — on a frame that exercises ties and negatives.  The Column
-    forms stay in-module as the executable reference; the twins are
-    what the query builders construct (one JVM parse instead of dozens
-    of py4j lambda builds)."""
-    from pyspark.sql import functions as F
-
-    from bigdata_20251_steam_spark.operators import similarity as sim
-
+def _kernel_hand_grid():
+    """The hand grid of the kernel-builder tests — ties and negatives —
+    and plain-Python values of each kernel's rule on it: first-minimum
+    argmin (equidistant centroids -> lowest cell; equidistant codewords
+    -> lowest code), ``(d, j)``-sorted probes, per-subspace codes,
+    reconstruction, LUT, ``Σ lut[s][codes[s]]`` and the two sign
+    halves of ``qr ++ q ++ 28 x -1 ++ 28 x 1``."""
     cents = [[0, 0, 0, 0], [10, 0, 0, 0], [0, 10, 0, 0]]
     books = [
         [[0, 0], [5, 5], [9, 9]],
         [[0, 0], [-5, -5]],
     ]
-    subdim = 2
+    m, subdim = len(books), 2
     rows = [
         (1, [1, 0, 0, 0]),
-        (2, [5, 0, 0, 0]),  # equidistant cells 0/1 -> tie to cell 0
+        (2, [5, 0, 0, 0]),   # equidistant cells 0/1 -> tie to cell 0
         (3, [0, 12, 3, -4]),
         (4, [2, 2, 2, 2]),
         (5, [-7, 3, 9, 9]),
+        (6, [2, 3, -2, -3]),  # both residual subspaces tie on codes
     ]
-    grid = spark.createDataFrame(rows, "vec_id long, q array<bigint>")
-    cmv = F.lit(cents).cast("array<array<bigint>>")
-    cbv = F.lit(books).cast("array<array<array<bigint>>>")
-    base = grid.withColumn("_cm", cmv).withColumn("_cb", cbv)
 
-    # built stepwise: the Column residual needs q/_cm still present
-    col_step = base.withColumn(
-        "best", sim._argmin_cell(F.col("q"), F.col("_cm"))
-    ).withColumn("cluster", F.col("best.c")).withColumn(
-        "qr",
-        F.zip_with(
-            F.col("q"),
-            F.element_at(F.col("_cm"), (F.col("cluster") + 1).cast("int")),
-            lambda x, y: x - y,
-        ),
+    def sq(a, b):
+        return sum((x - y) * (x - y) for x, y in zip(a, b))
+
+    def first_min(ds):
+        return ds.index(min(ds))
+
+    def sign_half(v, h):
+        return sum(1 << j for j in range(32) if v[h * 32 + j] > 0)
+
+    expect = {}
+    for vid, q in rows:
+        dc = [sq(q, c) for c in cents]
+        cell = first_min(dc)
+        qr = [a - b for a, b in zip(q, cents[cell])]
+        lut = [
+            [sq(qr[s * subdim:(s + 1) * subdim], w) for w in books[s]]
+            for s in range(m)
+        ]
+        codes = [first_min(lut[s]) for s in range(m)]
+        recon = [v for s in range(m) for v in books[s][codes[s]]]
+        adc = sum(lut[s][codes[s]] for s in range(m))
+        assert adc == sq(qr, recon)  # the ADC regrouping is exact
+        sig_in = qr + q + [-1] * 28 + [1] * 28
+        expect[vid] = {
+            "cluster": cell,
+            "sqdist": dc[cell],
+            "probes": [j for _, j in sorted(zip(dc, range(len(dc))))][:2],
+            "qr": qr,
+            "codes": codes,
+            "lut": lut,
+            "recon": recon,
+            "adc": adc,
+            "sig_lo": sign_half(sig_in, 0),
+            "sig_hi": sign_half(sig_in, 1),
+        }
+    # the tie rows actually hit the rules they claim to
+    assert sq(rows[1][1], cents[0]) == sq(rows[1][1], cents[1])
+    assert expect[2]["cluster"] == 0 and expect[2]["probes"] == [0, 1]
+    assert all(len(set(t)) < len(t) for t in expect[6]["lut"])
+    assert expect[6]["codes"] == [0, 0]
+    return cents, books, subdim, rows, expect
+
+
+def _kernel_builder_rows(grid, cm, cb, subdim):
+    """Run every artifact-column SQL builder over ``grid`` with the
+    centroid matrix ``cm`` and codebooks ``cb`` attached as columns;
+    rows keyed by ``vec_id`` in the shape of :func:`_kernel_hand_grid`'s
+    expected values."""
+    from bigdata_20251_steam_spark.operators import similarity as sim
+
+    sig = sim._sign_signature_sql(
+        "concat(qr, q, array_repeat(CAST(-1 AS BIGINT), 28), "
+        "array_repeat(CAST(1 AS BIGINT), 28))"
     )
-    col_out = col_step.select(
-        "vec_id",
-        "cluster",
-        "_cb",
-        "qr",
-        F.col("best.d").alias("sqdist"),
-        sim._probes_of(F.col("q"), F.col("_cm"), 2).alias("probes"),
-        sim._codes_col(F.col("_cb"), F.col("qr"), subdim).alias("codes"),
-        sim._ivfadc_lut_col(F.col("_cb"), F.col("qr"), subdim).alias("lut"),
-    ).withColumn(
-        "recon", sim._recon_col(F.col("_cb"), F.col("codes"))
-    ).withColumn(
-        "adc", sim._lut_adc_col(F.col("lut"), F.col("codes"))
-    ).withColumn("sig_lo", sim.sign_signature(
-        F.concat(F.col("qr"), F.expr("array_repeat(CAST(1 AS BIGINT), 60)"))
-    )[0]).drop("lut", "_cb", "qr")
-
-    sql_step = base.withColumn(
-        "cluster", F.expr(sim._argmin_cell_sql("q", "_cm") + ".c")
-    ).withColumn(
-        "sqdist", F.expr(sim._argmin_cell_sql("q", "_cm") + ".d")
-    ).withColumn("qr", F.expr(sim._residual_sql("q", "_cm", "cluster")))
-    sql_out = sql_step.select(
-        "vec_id",
-        "cluster",
-        "_cb",
-        "qr",
-        "sqdist",
+    best = sim._argmin_cell_sql("q", "_cm")
+    got = grid.withColumn("_cm", cm).withColumn("_cb", cb).withColumn(
+        "cluster", F.expr(best + ".c")
+    ).withColumn("sqdist", F.expr(best + ".d")).withColumn(
+        "qr", F.expr(sim._residual_sql("q", "_cm", "cluster"))
+    ).select(
+        "vec_id", "cluster", "sqdist", "qr", "_cb",
         F.expr(sim._probes_sql("q", "_cm", 2)).alias("probes"),
         F.expr(sim._codes_sql("_cb", "qr", subdim)).alias("codes"),
         F.expr(sim._lut_sql("_cb", "qr", subdim)).alias("lut"),
+        F.expr(sig[0]).alias("sig_lo"),
+        F.expr(sig[1]).alias("sig_hi"),
     ).withColumn(
         "recon", F.expr(sim._recon_sql("_cb", "codes"))
     ).withColumn(
         "adc", F.expr(sim._lut_adc_sql("lut", "codes"))
-    ).withColumn("sig_lo", F.expr(sim._sign_signature_sql(
-        "concat(qr, array_repeat(CAST(1 AS BIGINT), 60))"
-    )[0])).drop("lut", "_cb", "qr")
+    ).drop("_cb")
+    out = {}
+    for r in got.collect():
+        d = r.asDict(recursive=True)
+        out[d.pop("vec_id")] = d
+    return out
 
-    a = [tuple(r) for r in col_out.orderBy("vec_id").collect()]
-    b = [tuple(r) for r in sql_out.orderBy("vec_id").collect()]
-    assert a == b
 
-    # int-assign / pq-sub-assign twins on the same hand grid
-    lit_a = sim._int_assign(grid, cents).orderBy("vec_id").collect()
-    sql_a = grid.withColumn(
-        "_b", F.expr(sim._int_assign_sql("q", cents))
-    ).select(
-        "vec_id", "q", F.col("_b.c").alias("cluster"),
-        F.col("_b.d").alias("sqdist"),
-    ).orderBy("vec_id").collect()
-    assert [tuple(r) for r in lit_a] == [tuple(r) for r in sql_a]
+def test_sql_twin_builders_parity(spark):
+    """The SQL-string kernel builders — the one implementation of each
+    integer-distance, argmin, probe, PQ-code, reconstruction, LUT/ADC
+    and sign-signature kernel — replay plain-Python values of their
+    rules bit-for-bit on the hand grid (artifacts as literal columns):
+    same integers, same first-minimum tie rules.  The literal-artifact
+    builders (_int_assign_sql, _pq_sub_assign_sql) and the float
+    _sqdist_to_sql are held to the same reference."""
+    from bigdata_20251_steam_spark.operators import similarity as sim
 
-    sub_lit = grid.select(
+    cents, books, subdim, rows, expect = _kernel_hand_grid()
+    grid = spark.createDataFrame(rows, "vec_id long, q array<bigint>")
+    cm = F.lit(cents).cast("array<array<bigint>>")
+    cb = F.lit(books).cast("array<array<array<bigint>>>")
+    assert _kernel_builder_rows(grid, cm, cb, subdim) == expect
+
+    # literal-artifact builders: argmin over embedded centroids, and a
+    # single-subspace code over an embedded codebook (raw q; row 6's
+    # [2, 3] is equidistant from [0, 0] and [5, 5] -> code 0)
+    def sq(a, b):
+        return sum((x - y) * (x - y) for x, y in zip(a, b))
+
+    lit = grid.select(
         "vec_id",
-        sim._pq_sub_assign(books[0], F.slice(F.col("q"), 1, 2)).alias("c"),
-    ).orderBy("vec_id").collect()
-    sub_sql = grid.select(
-        "vec_id",
-        F.expr(sim._pq_sub_assign_sql(books[0], "slice(q, 1, 2)")).alias("c"),
-    ).orderBy("vec_id").collect()
-    assert [tuple(r) for r in sub_lit] == [tuple(r) for r in sub_sql]
+        F.expr(sim._int_assign_sql("q", cents)).alias("ia"),
+        F.expr(sim._pq_sub_assign_sql(books[0], "slice(q, 1, 2)")).alias(
+            "sub0"
+        ),
+    ).collect()
+    got_lit = {r["vec_id"]: (r["ia"]["d"], r["ia"]["c"], r["sub0"]) for r in lit}
+    want_lit = {}
+    for vid, q in rows:
+        e = expect[vid]
+        sub = [sq(q[:2], w) for w in books[0]]
+        want_lit[vid] = (e["sqdist"], e["cluster"], sub.index(min(sub)))
+    assert got_lit == want_lit
 
-    # float path: _sqdist_to twin (repr round-trip of doubles)
-    fl = spark.createDataFrame(
-        [(1, [0.1, -2.5, 3.25]), (2, [1e-7, 2.0, -0.125])],
-        "vec_id long, v array<double>",
-    )
+    # float path: sequential double accumulation from 0.0
+    fl = [(1, [0.1, -2.5, 3.25]), (2, [1e-7, 2.0, -0.125])]
     ctr = [0.30000000000000004, -1.5, 2.0]
-    f_lit = fl.select(sim._sqdist_to(F.col("v"), ctr).alias("d")).collect()
-    f_sql = fl.select(F.expr(sim._sqdist_to_sql("v", ctr)).alias("d")).collect()
-    assert [r["d"] for r in f_lit] == [r["d"] for r in f_sql]
+    want = []
+    for _, v in fl:
+        acc = 0.0
+        for x, y in zip(v, ctr):
+            acc += (x - y) * (x - y)
+        want.append(acc)
+    f_sql = spark.createDataFrame(fl, "vec_id long, v array<double>").select(
+        "vec_id", F.expr(sim._sqdist_to_sql("v", ctr)).alias("d")
+    ).orderBy("vec_id")
+    assert [r["d"] for r in f_sql.collect()] == want
+
+
+def test_pinned_artifact_forms_match_literal(spark):
+    """r13 (r12 verdict #2): the scalar-subquery artifact forms —
+    coarse argmin, probe argsort, per-subspace codes, reconstruction,
+    LUT/ADC, sign halves — replay the literal forms bit-for-bit on the
+    hand grid, including both tie rules (equidistant centroids ->
+    lowest cell; equidistant codewords -> lowest code): the same
+    builders over pinned ``_cm``/``_cb`` give the plain-Python values,
+    and their cells and codes equal the literal-artifact builders'
+    (_int_assign over embedded centroids, _pq_sub_assign_sql over
+    embedded codebooks).  It pins the CollapseProject behavior the
+    hoist relies on: a scalar subquery materialized via withColumn may
+    be folded INTO a higher-order function after analysis and still
+    execute."""
+    from bigdata_20251_steam_spark.operators import similarity as sim
+
+    cents, books, subdim, rows, expect = _kernel_hand_grid()
+    grid = spark.createDataFrame(rows, "vec_id long, q array<bigint>")
+    cm = sim._pinned_scalar(sim._cmat_view(spark, cents))
+    cb = sim._pinned_scalar(sim._cb_view(spark, books))
+    pinned = _kernel_builder_rows(grid, cm, cb, subdim)
+    assert pinned == expect
+
+    qr = spark.createDataFrame(
+        [(vid, pinned[vid]["qr"]) for vid, _ in rows],
+        "vec_id long, qr array<bigint>",
+    )
+    lit_codes = F.array(
+        *[
+            F.expr(
+                sim._pq_sub_assign_sql(
+                    books[s], f"slice(qr, {s * subdim + 1}, {subdim})"
+                )
+            )
+            for s in range(len(books))
+        ]
+    )
+    lit = sim._int_assign(grid, cents).join(
+        qr.select("vec_id", lit_codes.alias("codes")), "vec_id"
+    )
+    assert {
+        r["vec_id"]: (r["cluster"], r["sqdist"], list(r["codes"]))
+        for r in lit.collect()
+    } == {
+        vid: (p["cluster"], p["sqdist"], p["codes"])
+        for vid, p in pinned.items()
+    }
 
 
 def test_word_shingles_sql_twin_parity(spark):
-    """Optimization r18 (guide §4): word_shingles_sql / _md5_long_sql —
-    the SQL-string twins the minhash/fingerprint builders construct —
-    replay the Column forms exactly, including the short-doc empty
-    array, whitespace collapsing, and distinctness."""
+    """word_shingles_sql against Python-computed shingle lists: tokens
+    split on Java's ``\\s`` class after a space-only ``trim``, n-grams
+    joined by one space, distinct in first-occurrence order, and an
+    empty array for docs with fewer than n tokens (short docs, empty
+    text).  Repeated grams and tab/space runs included.  Plus
+    _md5_long_sql vs md5_long — both hash forms are live."""
+    import re
+
     from pyspark.sql import functions as F
 
     from bigdata_20251_steam_spark.functions.hashing import md5_long
     from bigdata_20251_steam_spark.operators import dedup as dd
 
+    texts = [
+        "the cat sat on the mat",
+        "  spaced   out\ttokens here  ",
+        "short one",
+        "",
+        "a a a a a",
+        "Ünïcode tokens ünïcode tokens again",
+        "\tlead tab \t\t run  the the the",
+    ]
     docs = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat"),
-            (2, "  spaced   out\ttokens here  "),
-            (3, "short one"),
-            (4, ""),
-            (5, "a a a a a"),
-            (6, "Ünïcode tokens ünïcode tokens again"),
-        ],
-        "doc_id long, text string",
+        list(enumerate(texts, 1)), "doc_id long, text string"
     )
+
+    def shingles(text, n):
+        toks = re.split(r"[ \t\n\x0b\f\r]+", text.strip(" "))
+        grams = [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+        return list(dict.fromkeys(grams))
+
+    assert shingles("a a a a a", 2) == ["a a"]
+    assert shingles("short one", 3) == shingles("", 2) == []
     for n in (2, 3):
-        col_form = docs.select(
-            "doc_id", dd.word_shingles(F.col("text"), n).alias("g")
-        ).orderBy("doc_id").collect()
-        sql_form = docs.select(
+        got = docs.select(
             "doc_id", F.expr(dd.word_shingles_sql("text", n)).alias("g")
         ).orderBy("doc_id").collect()
-        assert [tuple(r) for r in col_form] == [tuple(r) for r in sql_form]
+        assert [r["g"] for r in got] == [shingles(t, n) for t in texts]
     h_col = docs.select(md5_long(F.col("text")).alias("h")).collect()
     h_sql = docs.select(F.expr(dd._md5_long_sql("text")).alias("h")).collect()
     assert [r["h"] for r in h_col] == [r["h"] for r in h_sql]
@@ -4953,9 +4925,11 @@ def test_pin_frame_routes_by_size(spark, tmp_path):
 
 def test_np_encode_matches_hof_encode(spark):
     """Optimization r18 (r17 verdict #1, attack (b)): the Arrow/numpy
-    IVFADC encode must replay the interpreted-HOF form bit-for-bit —
-    HALF_UP quantization, ties-to-lowest cell and code, null
-    propagation for a NULL embedding row."""
+    IVFADC encode must replay the SQL-builder (interpreted HOF) form
+    bit-for-bit — HALF_UP quantization, ties-to-lowest cell and code,
+    null propagation for a NULL embedding row.  The ``scale=1`` rows
+    sit on rounding boundaries where ``floor(x + 0.5)`` disagrees with
+    Spark's ``round(double)`` (the addition itself rounds up)."""
     from pyspark.sql import functions as F
 
     from bigdata_20251_steam_spark.operators import similarity as sim
@@ -4969,27 +4943,15 @@ def test_np_encode_matches_hof_encode(spark):
         (4, [0.002, 0.002, 0.002, 0.002]),
         (5, None),                                # null embedding row
     ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    boundary = [
+        (11, [0.49999999999999994, -0.49999999999999994, 0.5, -0.5]),
+        (12, [1.5, -2.5, 2.4999999999999996, -1.5000000000000002]),
+        (13, [0.5000000000000001, -0.0, 1e-300, 3.4999999999999996]),
+        (14, [100000000.5, -100000000.5, 4.5, -4.5]),
+    ]
 
-    # HOF reference: the streaming branch's SQL-twin pipeline
     cbv = sim._pinned_scalar(sim._cb_view(spark, books))
     cm = sim._pinned_scalar(sim._cmat_view(spark, cents))
-    grid = sim._pq_quantized(emb, 1000, "vec_id", "embedding").withColumn(
-        "_cm", cm
-    ).withColumn("_cb", cbv)
-    hof = grid.withColumn(
-        "cluster", F.expr(sim._argmin_cell_sql("q", "_cm") + ".c")
-    ).withColumn(
-        "qr", F.expr(sim._residual_sql("q", "_cm", "cluster"))
-    ).select(
-        "vec_id",
-        "cluster",
-        "qr",
-        F.expr(sim._codes_sql("_cb", "qr", 2)).alias("codes"),
-    )
-
-    work = sim._ivfadc_working(emb, cents, books, 1000, "vec_id", "embedding")
-    npf = work.select("vec_id", "cluster", "qr", "codes")
 
     def norm(df):
         return sorted(
@@ -5002,9 +4964,34 @@ def test_np_encode_matches_hof_encode(spark):
             for r in df.collect()
         )
 
-    assert norm(hof) == norm(npf)
-    # the HOF form's null-embedding semantics: every distance is NULL,
-    # struct min falls through to the index — cell 0 / code 0 win,
-    # the residual stays NULL
-    null_row = [t for t in norm(npf) if t[0] == 5][0]
+    got = {}
+    for batch, scale in ((rows, 1000), (boundary, 1)):
+        emb = spark.createDataFrame(
+            batch, "vec_id long, embedding array<double>"
+        )
+        # reference: the streaming branch's SQL-builder pipeline
+        grid = sim._pq_quantized(
+            emb, scale, "vec_id", "embedding"
+        ).withColumn("_cm", cm).withColumn("_cb", cbv)
+        hof = grid.withColumn(
+            "cluster", F.expr(sim._argmin_cell_sql("q", "_cm") + ".c")
+        ).withColumn(
+            "qr", F.expr(sim._residual_sql("q", "_cm", "cluster"))
+        ).select(
+            "vec_id",
+            "cluster",
+            "qr",
+            F.expr(sim._codes_sql("_cb", "qr", 2)).alias("codes"),
+        )
+        work = sim._ivfadc_working(
+            emb, cents, books, scale, "vec_id", "embedding"
+        )
+        got[scale] = norm(work.select("vec_id", "cluster", "qr", "codes"))
+        assert norm(hof) == got[scale]
+    # Spark's HALF_UP on the first boundary row (cell 0, so qr == q)
+    assert got[1][0] == (11, 0, (0, 0, 1, -1), (0, 0))
+    # the SQL builders' null-embedding semantics: every distance is
+    # NULL, struct min falls through to the index — cell 0 / code 0
+    # win, the residual stays NULL
+    null_row = [t for t in got[1000] if t[0] == 5][0]
     assert null_row[1:] == (0, None, (0, 0))

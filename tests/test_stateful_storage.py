@@ -1070,7 +1070,7 @@ def test_index_lifecycle_stream_compact_retrain_composes(spark, tmp_path):
             "_cb", sim._pinned_scalar(sim._cb_view(spark, books))
         ).select(
             "vec_id",
-            sim._codes_col(F.col("_cb"), F.col("q"), subdim).alias("codes"),
+            F.expr(sim._codes_sql("_cb", "q", subdim)).alias("codes"),
         ).join(meta, "vec_id")
         enc.write.mode("overwrite").parquet(f"{fresh}/cluster={cell}")
 
